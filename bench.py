@@ -18,20 +18,26 @@ headline total drifts +3% and the probe drifts +3%, that's load; if
 the total moves and the probe doesn't, that's a real plan change.
 `value_over_calibration` pre-divides for convenience.
 
-COLD figures (r13, measurement-bug fix declared in
-OPTIMIZATION_r13.md): several query functions `persist()`
-intermediates, and the trained-quantizer memos keep model floats on
-the driver, so under min-of-3-after-warmup the timed runs of those
-queries read the warmup run's materialization instead of executing —
-the warm number measures a cache read. Each query is therefore ALSO
-timed cold: before every cold iteration `clear_computed_caches`
-drops the session CacheManager entries and the trained-model float
-memos (metadata memos — schemas, partition probes, expression
-fragments — stay; they cannot hold results), so every cold run pays
-the full computation from the parquet inputs, training included.
+COLD figures: several query functions `persist()` intermediates,
+so under min-of-3-after-warmup the timed runs of those queries read
+the warm-up run's materialization instead of executing — the warm
+number measures a cache read. Each query is therefore ALSO timed
+cold: before every cold iteration `spark.catalog.clearCache()`
+drops the session's CacheManager entries (metadata memos — schemas,
+partition probes, expression fragments — stay; they cannot hold
+results), so every cold run pays the full computation from the
+parquet inputs. Trained models (k-means quantizers, logreg
+trajectories) are never kept across runs, so warm runs train too.
 `queries` / `value` keep the historical warm min-of-3 methodology
 (comparable with rounds 1–12); `queries_cold` / `value_cold` are the
-honest execution figures.
+honest execution figures. A query that fails in either phase is
+dropped from BOTH tables, so the two always cover the same set; its
+error is reported under `errors` prefixed with the phase (`warm:` /
+`cold:`).
+
+This is the legacy warm/cold table. The repo benchmark, with fixed
+workloads, regression bounds and a traced per-layer run, is
+`python3 perfbench/run.py` (see BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -43,7 +49,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wilayah_aceh_etl_spark.cachectl import clear_computed_caches
 from wilayah_aceh_etl_spark.plans.registry import all_specs
 from wilayah_aceh_etl_spark.session import get_spark
 
@@ -82,31 +87,33 @@ def main() -> None:
     timings: dict[str, float] = {}
     timings_cold: dict[str, float] = {}
     errors: dict[str, str] = {}
+
+    def _min_of_3(fn, cold: bool) -> float:
+        best = float("inf")
+        for _ in range(3):
+            if cold:
+                spark.catalog.clearCache()
+            t0 = time.time()
+            fn(spark, sf_dir).collect()
+            best = min(best, time.time() - t0)
+        return round(best, 3)
+
     for name, spec in sorted(specs.items()):
         # One failing query must not zero out the whole bench run:
-        # record the error, keep timing the rest.
+        # record the error with its phase, keep timing the rest.
+        phase = "warm"
         try:
             spark.sparkContext.setJobDescription(f"bench:{name}")
-            df = spec.fn(spark, sf_dir)
-            df.collect()  # warm-up: codegen + file listing + broadcast
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                spec.fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            timings[name] = round(best, 3)
-            # cold: every iteration pays execution from parquet —
-            # no CacheManager reuse across runs, no trained floats
+            spec.fn(spark, sf_dir).collect()  # warm-up: codegen + listing
+            warm = _min_of_3(spec.fn, cold=False)
+            # cold: every iteration pays execution from parquet — no
+            # CacheManager reuse across runs
+            phase = "cold"
             spark.sparkContext.setJobDescription(f"bench:{name}:cold")
-            best = float("inf")
-            for _ in range(3):
-                clear_computed_caches(spark)
-                t0 = time.time()
-                spec.fn(spark, sf_dir).collect()
-                best = min(best, time.time() - t0)
-            timings_cold[name] = round(best, 3)
+            timings_cold[name] = _min_of_3(spec.fn, cold=True)
+            timings[name] = warm
         except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            errors[name] = f"{phase}: {type(exc).__name__}: {exc}"[:500]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
         finally:
             spark.sparkContext.setJobDescription(None)
@@ -122,6 +129,7 @@ def main() -> None:
         "timing": "min_of_3_after_warmup",
         "queries_cold": timings_cold,
         "value_cold": round(sum(timings_cold.values()), 3),
+        "n_queries_cold": len(timings_cold),
         "timing_cold": "min_of_3_caches_cleared_before_each_run",
         "calibration_sec": calibration,
         "value_over_calibration": (

@@ -33,10 +33,10 @@ def pytest_configure(config):
 
 
 def _run_full(config) -> bool:
-    return bool(
-        config.getoption("--full")
-        or os.environ.get("SPARK_GRAFT_FULL_TESTS")
-    )
+    """--full, or SPARK_GRAFT_FULL_TESTS set to anything but an
+    empty string, "0" or "false" (any case)."""
+    env = os.environ.get("SPARK_GRAFT_FULL_TESTS", "").strip().lower()
+    return bool(config.getoption("--full")) or env not in ("", "0", "false")
 
 
 def pytest_collection_modifyitems(config, items):

@@ -193,34 +193,6 @@ def test_jaccard_for_pairs_precomputed_sizes_identical(spark):
     assert a == b
 
 
-def test_trained_centroid_df_memo_dedupes_cache_entries(spark):
-    """r12: kmeans_centroids_cached returns the SAME DataFrame per
-    (key, session), so repeated semantic_dedup calls canonicalize to
-    one plan and CacheManager holds ONE ranked-relation entry instead
-    of leaking (and re-materializing) one per call."""
-    import wilayah_aceh_etl_spark.operators.similarity as S
-
-    emb = T.load_table(spark, SF, "embeddings")
-    c1 = S.kmeans_centroids_cached(emb, SF + "#memo-test", 8, 1)
-    c2 = S.kmeans_centroids_cached(emb, SF + "#memo-test", 8, 1)
-    assert c1 is c2
-    before = len(spark._jsc.sc().getRDDStorageInfo())
-    r1 = S.semantic_dedup(
-        emb, threshold=0.35, n_centroids=8, n_iter=1,
-        cache_key=SF + "#memo-test2",
-    )
-    rows1 = sorted(map(tuple, r1.collect()))
-    r2 = S.semantic_dedup(
-        emb, threshold=0.35, n_centroids=8, n_iter=1,
-        cache_key=SF + "#memo-test2",
-    )
-    rows2 = sorted(map(tuple, r2.collect()))
-    after = len(spark._jsc.sc().getRDDStorageInfo())
-    assert rows1 == rows2
-    assert after - before <= 1  # one entry for both runs, not one each
-    r1._ranked_cache.unpersist()
-
-
 def test_spread_memo_keyed_by_goal(spark):
     T._SPREAD_MEMO.clear()
     df = T.load_table(spark, SF, "nation").select("n_nationkey")

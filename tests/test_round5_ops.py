@@ -614,287 +614,6 @@ def test_bpe_trainer_learns_known_merges(spark, tmp_path):
     ]
 
 
-def test_trained_centroid_cache_invalidates_on_corpus_change(
-    spark, tmp_path
-):
-    """r6 advice: _TRAINED_CENTROID_CACHE keyed only on cache_key
-    would silently serve a stale quantizer if the files behind that
-    key changed within one driver process. The fix folds a
-    file-metadata fingerprint (uri, size, mtime_ns) into the memo
-    key; this pins that mutating the corpus retrains instead of
-    serving the old centroids, that the warm path on an UNCHANGED
-    corpus still hits the memo, and that the superseded
-    fingerprint's entry is EVICTED (a per-micro-batch trainer over a
-    mutating table holds one entry per corpus identity, not one per
-    historical file set)."""
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    def write(vals):
-        # varied directions so neither cluster empties mid-Lloyd
-        rows = [
-            (i, [float(v), float((v * 3 + i) % 11 - 5)])
-            for i, v in enumerate(vals)
-        ]
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).repartition(1).write.mode("overwrite").parquet(
-            f"{tmp_path}/emb.parquet"
-        )
-        return spark.read.parquet(f"{tmp_path}/emb.parquet")
-
-    key = str(tmp_path)
-    corpus1 = write([1, 2, 3, 100, 101, 102])
-    first = sorted(
-        tuple(r) for r in S.kmeans_centroids_cached(
-            corpus1, key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
-
-    # warm path, unchanged corpus: memo hit, no new entry
-    again = sorted(
-        tuple(r) for r in S.kmeans_centroids_cached(
-            corpus1, key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert again == first
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries
-
-    # overwrite the SAME path with different data, same cache_key
-    corpus2 = write([7, 8, 9, -50, -51, -52])
-    second = sorted(
-        tuple(r) for r in S.kmeans_centroids_cached(
-            corpus2, key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    # replaced, not accumulated: stale fingerprint evicted on insert
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries
-    assert second != first
-    # and the retrained values match an uncached fresh training
-    fresh = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids(
-            corpus2, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert second == fresh
-
-
-def test_trained_centroid_cache_bypassed_for_non_file_corpora(spark):
-    """A createDataFrame corpus has no file-metadata identity
-    (inputFiles() is empty), so the memo MUST be bypassed: two
-    different in-memory corpora under the SAME cache_key train
-    independently (pre-fix they collided on the degraded empty-list
-    fingerprint, and semantic_dedup would drop rows based on another
-    corpus's centroids), and nothing is inserted into the memo."""
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    def mem_corpus(vals):
-        rows = [
-            (i, [float(v), float((v * 3 + i) % 11 - 5)])
-            for i, v in enumerate(vals)
-        ]
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
-    a = sorted(
-        tuple(r) for r in S.kmeans_centroids_cached(
-            mem_corpus([1, 2, 3, 100, 101, 102]), "memkey",
-            n_centroids=2, n_iter=2,
-        ).collect()
-    )
-    b = sorted(
-        tuple(r) for r in S.kmeans_centroids_cached(
-            mem_corpus([7, 8, 9, -50, -51, -52]), "memkey",
-            n_centroids=2, n_iter=2,
-        ).collect()
-    )
-    assert a != b  # second corpus trained fresh, not served from memo
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # nothing memoized
-    # each matches its own uncached training
-    fresh_b = sorted(
-        tuple(r) for r in S.kmeans_centroids(
-            mem_corpus([7, 8, 9, -50, -51, -52]), n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert b == fresh_b
-
-
-def test_trained_centroid_cache_distinguishes_logical_corpora(
-    spark, tmp_path
-):
-    """r7 advice: the memo keyed on backing FILES alone would let two
-    logically different corpora derived from the same files
-    (different filters) share centroids under one cache_key —
-    dangerous, since semantic_dedup DROPS rows based on them. The
-    fix folds an expression-id-normalized digest of the analyzed
-    logical plan into the key. Pins: (a) two filters over the same
-    file train independently; (b) each keeps its own memo entry
-    (no thrash: re-requesting the first is still a memo hit); (c)
-    the same logical corpus REBUILT from a fresh read hits the memo
-    (expr-id stripping works)."""
-    from pyspark.sql import functions as F
-
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    rows = [
-        (i, [float(v), float((v * 3 + i) % 11 - 5)])
-        for i, v in enumerate([1, 2, 3, 100, 101, 102, -40, -41, -42])
-    ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/emb.parquet"
-    )
-
-    def load():
-        return spark.read.parquet(f"{tmp_path}/emb.parquet")
-
-    key = str(tmp_path)
-    lo = load().filter(F.col("vec_id") < 6)
-    hi = load().filter((F.col("vec_id") < 3) | (F.col("vec_id") >= 6))
-    a = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids_cached(
-            lo, key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    n_after_a = len(S._TRAINED_CENTROID_CACHE)
-    b = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids_cached(
-            hi, key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert a != b  # different logical corpora, same files, same key
-    # both entries coexist — distinct plans don't evict each other
-    assert len(S._TRAINED_CENTROID_CACHE) == n_after_a + 1
-    # each matches its own uncached training
-    fresh_b = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids(
-            load().filter((F.col("vec_id") < 3) | (F.col("vec_id") >= 6)),
-            n_centroids=2,
-            n_iter=2,
-        ).collect()
-    )
-    assert b == fresh_b
-    # same logical corpus, rebuilt from a fresh scan: memo hit
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
-    a2 = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids_cached(
-            load().filter(F.col("vec_id") < 6), key, n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert a2 == a
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # no new entry
-
-
-def test_trained_centroid_cache_bypassed_without_plan_digest(
-    spark, tmp_path, monkeypatch
-):
-    """Under Spark Connect _plan_digest returns None (no _jdf). The
-    memo must then be BYPASSED — training fresh — not degraded to a
-    shared '' digest, or two filters over the same files would
-    silently share centroids there (the exact aliasing the digest
-    exists to prevent)."""
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    rows = [
-        (i, [float(v), float((v * 3 + i) % 11 - 5)])
-        for i, v in enumerate([1, 2, 3, 100, 101, 102])
-    ]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/emb.parquet"
-    )
-    corpus = spark.read.parquet(f"{tmp_path}/emb.parquet")
-    monkeypatch.setattr(S, "_plan_digest", lambda df: None)
-    n_entries = len(S._TRAINED_CENTROID_CACHE)
-    got = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids_cached(
-            corpus, str(tmp_path), n_centroids=2, n_iter=2
-        ).collect()
-    )
-    assert len(S._TRAINED_CENTROID_CACHE) == n_entries  # nothing memoized
-    fresh = sorted(
-        tuple(r)
-        for r in S.kmeans_centroids(corpus, n_centroids=2, n_iter=2).collect()
-    )
-    assert got == fresh
-
-
-def test_plan_digest_distinguishes_self_join_sides(spark, tmp_path):
-    """Expression-id CANONICALIZATION (first-appearance renumbering)
-    must keep apart two corpora that differ only in which side of a
-    self-join a column comes from — blanket id erasure collapses
-    them (r8 review finding). And the same logical corpus rebuilt
-    from a fresh scan must still digest identically."""
-    from pyspark.sql import functions as F
-
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    rows = [(i, [float(i), 1.0]) for i in range(6)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(1).write.mode("overwrite").parquet(
-        f"{tmp_path}/emb.parquet"
-    )
-
-    def load():
-        return spark.read.parquet(f"{tmp_path}/emb.parquet")
-
-    def sided(side):
-        a, b = load().alias("a"), load().alias("b")
-        j = a.join(b, F.col("a.vec_id") == F.col("b.vec_id") + 1)
-        return j.select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col(f"{side}.embedding").alias("embedding"),
-        )
-
-    da, db = S._plan_digest(sided("a")), S._plan_digest(sided("b"))
-    if da is None:  # Spark Connect: no plan surface, bypass covers it
-        return
-    assert da != db
-    # stability: rebuilt-from-fresh-scan plans digest identically
-    assert S._plan_digest(sided("a")) == da
-
-
-def test_plan_digest_sees_past_tostring_truncation(spark):
-    """The default plan rendering elides attribute lists past
-    spark.sql.debug.maxToStringFields (25) with '... N more fields' —
-    two plans that differ only in the elided tail would digest
-    identically, recreating the memo-aliasing the digest exists to
-    prevent (r8 advice, medium). The digest must render untruncated:
-    40-column plans differing only in column 39 digest apart, and the
-    conf is restored afterwards."""
-    from pyspark.sql import functions as F
-
-    from wilayah_aceh_etl_spark.operators import similarity as S
-
-    key = "spark.sql.debug.maxToStringFields"
-    before = spark.conf.get(key, None)
-    base = spark.range(8)
-    wide_a = base.select(
-        *[(F.col("id") + i).alias(f"c{i}") for i in range(39)],
-        (F.col("id") + 100).alias("c39"),
-    )
-    wide_b = base.select(
-        *[(F.col("id") + i).alias(f"c{i}") for i in range(39)],
-        (F.col("id") + 200).alias("c39"),
-    )
-    da, db = S._plan_digest(wide_a), S._plan_digest(wide_b)
-    if da is None:  # Spark Connect: bypass covers it
-        return
-    assert da != db, "digest blind past the toString truncation point"
-    assert spark.conf.get(key, None) == before, "conf not restored"
-
-
 def test_kmeans_seeds_by_rank_on_offset_ids(spark):
     """Rank-based seeding (r8 review finding): a corpus whose ids all
     exceed C must still train with C seeds instead of crashing on an

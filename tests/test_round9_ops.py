@@ -676,42 +676,6 @@ def test_tracin_flags_flipped_labels(spark, tmp_path):
     assert all(s >= 0 for s in flipped + clean)
 
 
-def test_trajectory_memo_bit_identity(spark):
-    """logreg_fit_trajectory_cached: warm == cold bit-identical, the
-    memo holds one entry per logical corpus, and a DIFFERENT logical
-    corpus over the same files (extra filter) trains its own entry
-    rather than aliasing (the kmeans_centroids_cached contract)."""
-    from tests.conftest import SF_SMOKE
-    from wilayah_aceh_etl_spark.operators import ml_train as M
-    from wilayah_aceh_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings").select(
-        "vec_id",
-        "embedding",
-        F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
-    )
-    M._TRAJECTORY_CACHE.clear()
-    cold = M.logreg_fit_trajectory_cached(
-        emb, cache_key="t", n_iter=3, lr=2.0
-    )
-    assert len(M._TRAJECTORY_CACHE) == 1
-    warm = M.logreg_fit_trajectory_cached(
-        emb, cache_key="t", n_iter=3, lr=2.0
-    )
-    assert warm == cold
-    assert len(M._TRAJECTORY_CACHE) == 1
-    plain = M.logreg_fit_trajectory(emb, n_iter=3, lr=2.0)
-    assert plain == cold
-    # a filtered corpus over the same files must NOT alias
-    sub = emb.filter(F.col("vec_id") % 2 == 0)
-    other = M.logreg_fit_trajectory_cached(
-        sub, cache_key="t", n_iter=3, lr=2.0
-    )
-    assert len(M._TRAJECTORY_CACHE) == 2
-    assert other != cold
-    M._TRAJECTORY_CACHE.clear()
-
-
 def test_mutual_information_control_and_ordering(spark):
     """MI invariants on the real corpus: the constant feature's MI
     is EXACTLY 0 (negative control), every MI is non-negative, and

@@ -119,7 +119,10 @@ SUPERSEDED: the trained-centroid DataFrame memo
 re-materialization, so run 2+ pays only the pair join + keep join.
 Fresh-session 12-run curve at the r12 HEAD (calibration 0.2735):
 14.25 1.338 1.090 0.934 0.916 1.071 1.007 0.996 0.945 0.857 0.911
-1.018 — min-of-3 0.93, floor ~0.86. Read against [0.85, 1.35].""",
+1.018 — min-of-3 0.93, floor ~0.86. Read against [0.85, 1.35].
+Stale since that memo was removed: every run now retrains the
+quantizer and re-materializes the ranked relation, so re-measure
+before reading a run against this band.""",
     "data_selection_dsir_topk": """\
 **Bench-variance adjudication (round 11, r10 verdict ask #2 — the
 r9→r10 +17% move, 1.300 → 1.520 s, against a COOLER box).** Same
@@ -176,7 +179,10 @@ applied). Fresh-session 12-run idle-box curve (calibration 0.2606):
 12.989 1.345 1.292 1.300 1.084 1.217 1.081 1.043 1.449 1.102 1.053
 1.073 — bench-protocol min-of-3 1.29, warmed floor ~1.04. Read
 against a [1.00, 1.45] band; judge regressions by the
-calibration-normalized ratio or a fresh ≥10-run curve.""",
+calibration-normalized ratio or a fresh ≥10-run curve. Stale since
+trained centroids stopped being memoized across runs: every run now
+pays its own Lloyd training, so re-measure before reading a run
+against this band.""",
     "events_asof_last_purchase": """\
 **Bench-variance band (round 12, r11 verdict ask #3 — the r10→r11
 +19% move, 0.672 → 0.797 s, zero code change).** Two independent

@@ -324,60 +324,6 @@ def logreg_fit_trajectory(
         v.unpersist()
 
 
-# per-(corpus, config) memo of training trajectories — the dynamics
-# family (cartography / forgetting / TracIn / RHO) scores the SAME
-# lr=2.0 trajectory through different lenses; without the memo a
-# driver window running the family retrains it once per query
-_TRAJECTORY_CACHE: dict = {}
-
-
-def logreg_fit_trajectory_cached(
-    df: DataFrame,
-    cache_key: str,
-    n_iter: int = 3,
-    lr: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "y",
-) -> list[tuple[list[float], float]]:
-    """logreg_fit_trajectory with per-(corpus, config) memoization of
-    the driver-side iterates — the kmeans_centroids_cached contract,
-    verbatim: the memo key folds in a file-metadata fingerprint of
-    the corpus scan (staleness: mutated files retrain) AND a digest
-    of its analyzed logical plan (aliasing: two logically different
-    corpora over the same files never share weights); when either is
-    unobservable (in-memory source, Spark Connect) the memo is
-    BYPASSED and training runs fresh. Cached values ARE the training
-    output — a cold and a warm call return bit-identical iterates
-    (pinned by tests/test_round9_ops.py::test_trajectory_memo_bit_identity)."""
-    from wilayah_aceh_etl_spark.operators.similarity import (
-        _corpus_fingerprint,
-        _plan_digest,
-    )
-
-    cfg = (cache_key, n_iter, lr, id_col, vec_col, label_col)
-    fp = _corpus_fingerprint(df)
-    pd_ = _plan_digest(df)
-    if fp is None or pd_ is None:
-        return logreg_fit_trajectory(
-            df, n_iter, lr, id_col, vec_col, label_col
-        )
-    key = (*cfg, fp, pd_)
-    if key not in _TRAJECTORY_CACHE:
-        # evict superseded FILE fingerprints of the same (config,
-        # plan) — one entry per logical corpus, not per file set
-        for stale in [
-            k
-            for k in _TRAJECTORY_CACHE
-            if k[:6] == cfg and k[7] == key[7]
-        ]:
-            del _TRAJECTORY_CACHE[stale]
-        _TRAJECTORY_CACHE[key] = logreg_fit_trajectory(
-            df, n_iter, lr, id_col, vec_col, label_col
-        )
-    return [(list(w), b) for w, b in _TRAJECTORY_CACHE[key]]
-
-
 def doremi_domain_weights(
     df: DataFrame,
     n_iter: int = 3,

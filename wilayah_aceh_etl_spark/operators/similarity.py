@@ -522,229 +522,6 @@ def ivf_kmeans_topk(
     return _ivf_search(c, cent, q, k, n_probe)
 
 
-# Trained coarse quantizers are BUILD artifacts: a real IVF system
-# trains the quantizer once when the index is built and serves every
-# query against it — training cost is amortized over the index
-# lifetime, exactly like ANN-benchmark practice (index build is
-# reported separately from search latency). This memo keys on
-# (cache_key, C, iters) so repeated reads of the same corpus pay
-# training once; the driver-side payload is C×d floats (16×64 ≈ 8 KB
-# at the defaults), the same O(C·d) state kmeans_centroids already
-# keeps on the driver between Lloyd iterations.
-_TRAINED_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-# The centroid DATAFRAME per (key, session) — not just the floats
-# (r12 optimization round). createDataFrame builds a new LogicalRDD
-# each call, and two LogicalRDDs over different RDD ids never
-# canonicalize equal, so every plan embedding a fresh centroid
-# relation is a NEW plan to Spark's CacheManager: semantic_dedup's
-# persist() was re-materializing (and LEAKING) one ranked-relation
-# cache entry per call — measured 1 entry/run at sf0.1, each paying
-# the full assignment+window rebuild (~0.9 s/run). Handing every
-# caller the SAME DataFrame object makes downstream plans
-# canonicalize equal, so CacheManager dedupes and run 2+ reads the
-# one materialized entry. Values hold (session, df); the session is
-# identity-checked on lookup so a restarted driver never receives a
-# DataFrame bound to a dead session.
-_TRAINED_CENTROID_DF_CACHE: dict[tuple, tuple[object, DataFrame]] = {}
-
-
-def _corpus_fingerprint(df: DataFrame) -> str | None:
-    """Best-effort data fingerprint for the trained-centroid memo:
-    the (uri, size, mtime_ns) of every file backing the scan, hashed.
-    Pure driver-side file metadata — no Spark job, no data read — so
-    the warm path stays free. If the corpus files change under the
-    same cache_key, the fingerprint changes and the quantizer
-    retrains instead of silently serving a stale index.
-
-    Returns None when the corpus is NOT file-backed (createDataFrame,
-    in-memory views — inputFiles() empty or unavailable): such a
-    corpus has no observable identity, so the caller must BYPASS the
-    memo and train fresh rather than risk serving another corpus's
-    centroids — the failure mode matters because semantic_dedup
-    DROPS rows based on these centroids."""
-    import hashlib
-    import os
-
-    sig: list[tuple] = []
-    try:
-        for uri in sorted(df.inputFiles()):
-            path = uri[5:] if uri.startswith("file:") else uri
-            try:
-                st = os.stat(path)
-                sig.append((uri, st.st_size, st.st_mtime_ns))
-            except OSError:
-                sig.append((uri, -1, -1))
-    except Exception:
-        return None
-    if not sig:
-        return None
-    return hashlib.md5(repr(sig).encode()).hexdigest()
-
-
-def _plan_digest(df: DataFrame) -> str | None:
-    """Best-effort digest of the DataFrame's ANALYZED logical plan,
-    with per-session expression ids (`#123`) CANONICALIZED — each
-    distinct id replaced by its order of first appearance — so the
-    same logical corpus rebuilt from a fresh load hashes identically
-    (plan construction assigns fresh ids in the same deterministic
-    order). Canonicalizing rather than erasing matters: two corpora
-    that differ only in WHICH side of a self-join a column comes
-    from differ only in their id cross-references, which erasure
-    would collapse into one digest.
-
-    Why it exists (r7 advice): _corpus_fingerprint keys on backing
-    FILES only, so two logically different corpora derived from the
-    same files (different filters/projections) would otherwise share
-    a memo entry — dangerous, since semantic_dedup DROPS rows based
-    on the cached centroids. Folding the plan shape into the key
-    closes that aliasing.
-
-    Returns None under Spark Connect (no _jdf surface); the caller
-    must then BYPASS the memo (train fresh), the same conservative
-    rule as a missing file fingerprint — a docstring contract is not
-    enough when a collision drops the wrong rows.
-
-    Truncation guard (r8 advice): the default plan rendering elides
-    attribute lists past spark.sql.debug.maxToStringFields (25) with
-    '... N more fields', so two corpora whose plans differ only in
-    the elided tail would digest identically — recreating the exact
-    aliasing this digest exists to prevent. The conf is raised to
-    2^30 around the render (and restored in a finally), so the
-    digest always sees the full attribute lists."""
-    import hashlib
-    import re
-
-    _MAXF = "spark.sql.debug.maxToStringFields"
-    try:
-        conf = df.sparkSession.conf
-        prev = conf.get(_MAXF, None)
-        conf.set(_MAXF, str(1 << 30))
-        try:
-            plan = df._jdf.queryExecution().analyzed().toString()
-        finally:
-            if prev is None:
-                conf.unset(_MAXF)
-            else:
-                conf.set(_MAXF, prev)
-    except Exception:
-        return None
-    seen: dict[str, str] = {}
-
-    def canon(m: "re.Match[str]") -> str:
-        return seen.setdefault(m.group(0), f"#e{len(seen)}")
-
-    return hashlib.md5(re.sub(r"#\d+", canon, plan).encode()).hexdigest()
-
-
-def kmeans_centroids_cached(
-    corpus: DataFrame,
-    cache_key: str,
-    n_centroids: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """kmeans_centroids with per-(corpus, config) memoization of the
-    driver-side centroid values. First call trains (n_iter Lloyd
-    passes over the corpus); later calls rebuild the tiny (cid, cvec)
-    relation from the cached floats. Determinism is unaffected: the
-    cached values ARE the quantized-mean training output, so a cold
-    and a warm call return bit-identical centroids.
-
-    Staleness contract (r6 advice): the memo key includes a
-    file-metadata fingerprint of the corpus scan
-    (_corpus_fingerprint), so mutating the files behind the same
-    cache_key retrains rather than serving centroids trained on the
-    old data. The fingerprint is driver-side os.stat only — the warm
-    path still runs zero Spark jobs.
-
-    Aliasing contract (r7 advice): the key ALSO folds in a digest of
-    the corpus's analyzed logical plan (_plan_digest), so two
-    logically different corpora over the same files (different
-    filters/projections) never share centroids. Under Spark Connect
-    the plan digest is unavailable (None) and the memo is BYPASSED —
-    training runs fresh, the same conservative rule as a missing
-    file fingerprint, because a silent collision drops the wrong
-    rows downstream (Connect callers wanting the memo can collect
-    centroids once and rebuild the tiny relation themselves)."""
-    cfg = (cache_key, n_centroids, n_iter, id_col, vec_col)
-    fp = _corpus_fingerprint(corpus)
-    pd_ = _plan_digest(corpus)
-    if fp is None or pd_ is None:
-        # no observable corpus identity (in-memory source, or no JVM
-        # plan surface under Connect): train fresh rather than risk
-        # serving another corpus's centroids
-        return kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
-    key = (*cfg, fp, pd_)
-    if key not in _TRAINED_CENTROID_CACHE:
-        rows = kmeans_centroids(
-            corpus, n_centroids, n_iter, id_col, vec_col
-        ).collect()
-        # evict superseded FILE fingerprints of the same (config,
-        # plan) so a long-lived driver training per micro-batch over
-        # a mutating table holds ONE entry per logical corpus, not
-        # one per historical file set — but distinct logical corpora
-        # (different plan digests) under the same cache_key keep
-        # their own entries rather than thrashing each other
-        for stale in [
-            k
-            for k in _TRAINED_CENTROID_CACHE
-            if k[:5] == cfg and k[6] == key[6]
-        ]:
-            del _TRAINED_CENTROID_CACHE[stale]
-            _TRAINED_CENTROID_DF_CACHE.pop(stale, None)
-        _TRAINED_CENTROID_CACHE[key] = [
-            (int(r["cid"]), [float(x) for x in r["cvec"]]) for r in rows
-        ]
-    sess = corpus.sparkSession
-    hit = _TRAINED_CENTROID_DF_CACHE.get(key)
-    if hit is not None and hit[0] is sess:
-        return hit[1]
-    # sweep entries bound to OTHER sessions so a driver that cycles
-    # sessions never pins a stopped session's object graph through
-    # this module-level dict (r12 review finding); the float memo
-    # above is session-independent and survives
-    for k in [
-        k for k, v in _TRAINED_CENTROID_DF_CACHE.items() if v[0] is not sess
-    ]:
-        del _TRAINED_CENTROID_DF_CACHE[k]
-    df = sess.createDataFrame(
-        _TRAINED_CENTROID_CACHE[key], "cid long, cvec array<double>"
-    )
-    _TRAINED_CENTROID_DF_CACHE[key] = (sess, df)
-    return df
-
-
-def ivf_trained_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cache_key: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The SHIPPING IVF configuration (r5 verdict ask #3): search
-    against a Lloyd-trained coarse quantizer, with training memoized
-    per corpus as an index-build step. Semantically identical to
-    ivf_kmeans_topk (same training, same _ivf_search read path, same
-    oracle); operationally it prices training as amortized index
-    build rather than per-query work, which is what a bench of the
-    serving path should measure. Trained recall@10 on seed-disjoint
-    queries: 0.55 vs 0.40 seeded (tests/test_round5_ops.py)."""
-    c = _prep(corpus, id_col, vec_col)
-    cent = F.broadcast(
-        kmeans_centroids_cached(
-            corpus, cache_key, n_centroids, n_iter, id_col, vec_col
-        )
-    )
-    q = _prep(queries, id_col, vec_col)
-    return _ivf_search(c, cent, q, k, n_probe)
-
-
 def _probe_half(
     q: DataFrame, cent: DataFrame, half_expr, out_cid: str, n_probe: int
 ) -> DataFrame:
@@ -989,7 +766,6 @@ def semantic_dedup(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache_key: str | None = None,
     target_cluster_size: int = 128,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic deduplication (Abbas
@@ -1027,15 +803,6 @@ def semantic_dedup(
     corpora should `out._ranked_cache.unpersist()` after
     materializing, since cache ENTRIES are never auto-evicted.
 
-    `cache_key` (same contract as ivf_trained_topk): when given, the
-    quantizer training is memoized per corpus via
-    kmeans_centroids_cached — the correct accounting, since the
-    clustering is an INDEX-BUILD artifact amortized over every dedup
-    run against the same corpus (measured at the local sf1 decade:
-    training dominates at ~115 s while the cluster-scoped pair join
-    itself is ~0.5 s; with the memo, repeat runs pay only the join).
-    Cold/warm results are bit-identical, so oracles are unaffected.
-
     `n_centroids=None` derives C from the corpus:
     `max(16, ceil(n / target_cluster_size))` — the published C ∝ N
     practice, so the quadratic Σ|cluster|² pair work stays bounded
@@ -1059,15 +826,9 @@ def semantic_dedup(
         # ceiling division: mean cluster size n/C ≤ target holds
         # exactly (floor would let it creep just past the target)
         n_centroids = max(16, -(-n // target_cluster_size))
-    if cache_key is not None:
-        trained = kmeans_centroids_cached(
-            corpus, cache_key, n_centroids, n_iter, id_col, vec_col
-        )
-    else:
-        trained = kmeans_centroids(
-            corpus, n_centroids, n_iter, id_col, vec_col
-        )
-    cent = F.broadcast(trained)
+    cent = F.broadcast(
+        kmeans_centroids(corpus, n_centroids, n_iter, id_col, vec_col)
+    )
     # nearest centroid + its cosine per vector — the shared
     # _assign_nearest encoding (one copy of the tie-break-sensitive
     # argmax that the oracle mirrors)
@@ -1093,10 +854,9 @@ def semantic_dedup(
     # identical output. Lifetime (r8 advice — the earlier "until LRU
     # eviction" claim was WRONG: Spark's CacheManager never evicts
     # cache ENTRIES, only memory blocks spill/evict to disk, so each
-    # distinct corpus deduped by a long-lived driver would pin one
-    # entry forever): repeat calls on the same corpus reuse the one
-    # entry (CacheManager dedupes by canonicalized plan), and the
-    # caller OWNS release — the returned plan carries the handle as
+    # call by a long-lived driver would pin one entry forever — each
+    # call trains its own centroid relation, so no two calls' plans
+    # canonicalize equal): the caller OWNS release — the returned plan carries the handle as
     # `_ranked_cache`, mirroring semantic_admission_pruned's
     # `_admission_cache` contract: materialize the result, then
     # `out._ranked_cache.unpersist()`. Short-lived gate/bench

@@ -3658,6 +3658,14 @@ ORDER BY query_id, rk
 
 
 @register(
+    "similarity_ivf_trained_topk",
+    oracle=_IVF_KMEANS_ORACLE,
+    tags=("ext", "similarity", "ivf", "ann", "kmeans", "serving"),
+    description="IVF top-10, trained quantizer (bench-tagged name of "
+    "similarity_ivf_kmeans_topk)",
+    bench=True,
+)
+@register(
     "similarity_ivf_kmeans_topk",
     oracle=_IVF_KMEANS_ORACLE,
     tags=("ext", "similarity", "ivf", "ann", "kmeans"),
@@ -3677,42 +3685,6 @@ def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         S.ivf_kmeans_topk(
             emb, queries, k=10, n_centroids=16, n_probe=4, n_iter=2
-        )
-        .withColumn("rk", F.col("rk").cast("int"))
-        .orderBy("query_id", "rk")
-    )
-
-
-@register(
-    "similarity_ivf_trained_topk",
-    oracle=_IVF_KMEANS_ORACLE,
-    tags=("ext", "similarity", "ivf", "ann", "kmeans", "serving"),
-    description="IVF top-10, trained quantizer priced as index build (memoized)",
-    bench=True,
-)
-def similarity_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SHIPPING IVF path, benched (r5 verdict ask #3): identical
-    semantics and oracle to similarity_ivf_kmeans_topk — the oracle
-    re-derives the 2-iteration Lloyd training AND the search — but
-    the quantizer is memoized per sf_dir as an INDEX-BUILD artifact
-    (operators/similarity.py::kmeans_centroids_cached), so the timed
-    bench runs measure the serving path against trained centroids,
-    the way ANN benchmarks separate index build from search latency.
-    A/B at sf0.1/local[32]: retrain-per-query 5.0 s vs seeded search
-    1.6 s; memoized-trained search benches within noise of the seeded
-    plan because the read plan (_ivf_search) is byte-identical —
-    only the centroid VALUES differ."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return (
-        S.ivf_trained_topk(
-            emb,
-            queries,
-            cache_key=sf_dir,
-            k=10,
-            n_centroids=16,
-            n_probe=4,
-            n_iter=2,
         )
         .withColumn("rk", F.col("rk").cast("int"))
         .orderBy("query_id", "rk")
@@ -4193,10 +4165,6 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.35,
         n_centroids=16,
         n_iter=2,
-        # index-build accounting: the quantizer is trained once per
-        # corpus (file-fingerprinted memo) and every dedup run against
-        # the same corpus pays only the cluster-scoped pair join
-        cache_key=sf_dir,
     )
 
 
@@ -4638,10 +4606,9 @@ ORDER BY query_id, rk
 def embedding_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-pair mining the way retrieval-model training
     pipelines run it (the RocketQA/SBERT denoising recipe): retrieve
-    each query's top-20 via the TRAINED IVF index (the same memoized
-    quantizer similarity_ivf_trained_topk serves — one index build
-    amortized over retrieval, dedup, and mining), anchor each query
-    at its best same-label retrieved cosine (the positive), then keep
+    each query's top-20 via the TRAINED IVF index (the quantizer
+    training similarity_ivf_kmeans_topk runs), anchor each query at
+    its best same-label retrieved cosine (the positive), then keep
     as hard negatives only different-label candidates at least a
     0.02-cosine margin BELOW the positive — candidates above that
     line are probable false negatives (unlabeled positives) and are
@@ -4666,10 +4633,9 @@ def embedding_contrastive_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id").between(100, 119))
-    retrieved = S.ivf_trained_topk(
+    retrieved = S.ivf_kmeans_topk(
         emb,
         queries,
-        cache_key=sf_dir,
         k=20,
         n_centroids=16,
         n_probe=4,

@@ -8,8 +8,8 @@ the two families individually cannot: does semantic dedup
 preferentially discard LOW-influence (redundant) examples, or is it
 throwing away high-influence training signal?
 
-Everything here reuses existing machinery: the memoized lr=2.0
-trajectory (operators/ml_train.py::logreg_fit_trajectory_cached),
+Everything here reuses existing machinery: the lr=2.0 trajectory
+(operators/ml_train.py::logreg_fit_trajectory),
 the SemDeDup operator (operators/similarity.py::semantic_dedup), and
 the established oracle CTE generators (_emb_train_sql,
 _ivf_km_step_sql with the r10 table-name parameters). Zero new
@@ -160,8 +160,8 @@ def data_curation_influence_dedup_audit(
 ) -> DataFrame:
     """Influence-aware dedup audit — the round-9 curation families
     composed end to end (the r9 verdict's stretch ask): TracIn
-    self-influence (Pruthi et al. 2020, from the SAME memoized
-    lr=2.0 trajectory the cartography family trains) scores every
+    self-influence (Pruthi et al. 2020, from the SAME lr=2.0
+    trajectory the cartography family trains) scores every
     embedding, SemDeDup (Abbas et al. 2023, the SAME semantic_dedup
     operator dedup_semantic_clusters registers) issues keep/drop
     verdicts, and the audit reports the 2×2 contingency of
@@ -187,13 +187,10 @@ def data_curation_influence_dedup_audit(
     (never all-pairs), one vec_id equi-join between the two N-row
     relations, a 1-row floor-mean broadcast, and a 4-row aggregate —
     nothing new crosses the wire at 100 TB that the two parent
-    queries don't already move. Both trainings ride their per-corpus
-    memos (trajectory + quantizer), so in a gate window with the
-    parent queries this audit pays only the join and aggregates."""
+    queries don't already move. Both trainings (trajectory +
+    quantizer) run inside this query, exactly as in the parents."""
     from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
-    from wilayah_aceh_etl_spark.operators.ml_train import (
-        logreg_fit_trajectory_cached,
-    )
+    from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit_trajectory
 
     emb = load_table(spark, sf_dir, "embeddings")
     labeled = emb.select(
@@ -201,9 +198,7 @@ def data_curation_influence_dedup_audit(
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    traj = logreg_fit_trajectory_cached(
-        labeled, cache_key=sf_dir, n_iter=3, lr=2.0
-    )
+    traj = logreg_fit_trajectory(labeled, n_iter=3, lr=2.0)
     v = labeled.select(
         "vec_id", as_double(F.col("embedding")).alias("x"), "y"
     )
@@ -225,7 +220,7 @@ def data_curation_influence_dedup_audit(
     )
 
     keepset = S.semantic_dedup(
-        emb, threshold=0.35, n_centroids=16, n_iter=2, cache_key=sf_dir
+        emb, threshold=0.35, n_centroids=16, n_iter=2
     ).select("vec_id", "keep")
 
     j = infl.join(keepset, "vec_id")
@@ -505,9 +500,7 @@ def dedup_semantic_chain_audit(
     dedup itself runs (Σ|cluster|², never all-pairs) and reuses the
     operator's persisted ranked relation; the blame flag is one
     MAX() per removed row and the output is C rows."""
-    return _chain_audit_frame(
-        spark, sf_dir, n_centroids=16, cache_key=sf_dir
-    )
+    return _chain_audit_frame(spark, sf_dir, n_centroids=16)
 
 
 def _chain_audit_frame(
@@ -683,7 +676,7 @@ def training_gradient_noise_scale(
     training run budgets its world size against this number. For
     the logistic model the per-example gradient is g_i =
     (e_i·x_i, e_i) with e_i the rational-sigmoid residual at the
-    trained checkpoint (the memoized lr=2.0 trajectory's last
+    trained checkpoint (the lr=2.0 trajectory's last
     iterate — the same checkpoint the TracIn family scores), so
     ‖g_i‖² = e_i²·(‖x_i‖²+1) and the mean gradient is the
     per-coordinate residual sum — all exactly the quantities the
@@ -739,9 +732,7 @@ def _gns_scalar_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers both the GNS query and the critical-batch
     schedule (round11_queries) emit their floats from."""
     from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
-    from wilayah_aceh_etl_spark.operators.ml_train import (
-        logreg_fit_trajectory_cached,
-    )
+    from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit_trajectory
 
     emb = load_table(spark, sf_dir, "embeddings")
     labeled = emb.select(
@@ -749,9 +740,7 @@ def _gns_scalar_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    traj = logreg_fit_trajectory_cached(
-        labeled, cache_key=sf_dir, n_iter=3, lr=2.0
-    )
+    traj = logreg_fit_trajectory(labeled, n_iter=3, lr=2.0)
     w3, b3 = traj[-1]
     v = labeled.select(
         "vec_id", as_double(F.col("embedding")).alias("x"), "y"
@@ -1908,7 +1897,6 @@ def dedup_semantic_clusters_derived_c(
         n_centroids=None,
         n_iter=2,
         target_cluster_size=16,
-        cache_key=f"{sf_dir}#derived16",
     )
 
 

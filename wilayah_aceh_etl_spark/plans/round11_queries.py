@@ -25,7 +25,7 @@ Everything reuses ONE-copy machinery: _chain_audit_frame /
 _chain_audit_tail, _semdedup_derived_c_prelude, _gns_scalar_frame /
 _gns_prelude (all round10_queries), the MinHash pipeline
 (operators/dedup.py + ext_queries' shared CTE fragments), and
-semantic_dedup with its per-corpus memo. Zero new numeric code paths.
+semantic_dedup. Zero new numeric code paths.
 """
 
 from __future__ import annotations
@@ -90,7 +90,6 @@ def dedup_semantic_chain_audit_derived_c(
         sf_dir,
         n_centroids=None,
         target_cluster_size=16,
-        cache_key=f"{sf_dir}#derived16",
     )
 
 
@@ -226,9 +225,7 @@ def dedup_policy_agreement_audit(
     composition adds one doc_id equi-join between two N-row keep
     relations, a ≤4-row aggregate, and a 4-row window — nothing new
     crosses the wire that the parents don't move."""
-    return _policy_agreement_frame(
-        spark, sf_dir, n_centroids=16, cache_key=sf_dir
-    )
+    return _policy_agreement_frame(spark, sf_dir, n_centroids=16)
 
 
 def _minhash_removed_ids(docs: DataFrame) -> DataFrame:

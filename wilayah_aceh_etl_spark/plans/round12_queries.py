@@ -28,10 +28,9 @@ Everything reuses ONE-copy machinery: _policy_agreement_frame /
 _minhash_chain_sql / _POLICY_AGREEMENT_TAIL / _POLICY_BASE_SQL /
 _MRM_SQL / _minhash_removed_ids / _ngram_grams_frame /
 _NGRAM_GRAMS_SQL / _MODEL_SCALES (round11_queries),
-_semdedup_derived_c_prelude (round10_queries), semantic_dedup with
-its per-corpus memo, and this module's own shared _crosscheck_tail /
-_doc_bigrams / _bigram_crosscheck_frame. Zero new numeric code
-paths.
+_semdedup_derived_c_prelude (round10_queries), semantic_dedup, and
+this module's own shared _crosscheck_tail / _doc_bigrams /
+_bigram_crosscheck_frame. Zero new numeric code paths.
 """
 
 from __future__ import annotations
@@ -120,7 +119,6 @@ def dedup_policy_agreement_audit_derived_c(
         sf_dir,
         n_centroids=None,
         target_cluster_size=16,
-        cache_key=f"{sf_dir}#derived16",
     )
 
 
@@ -323,10 +321,7 @@ def curation_funnel_data_budget(
     BroadcastNestedLoopJoin) and a 4-row scale grid (broadcast
     cross). The corpus-scale work is exactly the parents' (banded
     LSH candidates; derived-C cid equi-join with |cluster| ≈ 16 held
-    constant). The shared cache_key memo-shares the CENTROID
-    TRAINING with dedup_policy_agreement_audit_derived_c
-    (kmeans_centroids_cached caches the quantizer, not the keep
-    verdicts — self-review r12), so each invocation still runs the
+    constant): each invocation trains its own quantizer and runs the
     corpus-scale assignment, removal sweep, and MinHash chain; what
     the funnel adds BEYOND re-deriving the audit's per-doc verdicts
     is ≤4-row algebra."""
@@ -340,7 +335,6 @@ def curation_funnel_data_budget(
         sf_dir,
         n_centroids=None,
         target_cluster_size=16,
-        cache_key=f"{sf_dir}#derived16",
     ).select("minhash_keep", "semantic_keep", "n_docs", "tokens")
     pol = F.broadcast(
         spark.createDataFrame(
@@ -664,9 +658,9 @@ def text_distinct2_semdedup_crosscheck(
     Determinism: identical machinery to the MinHash sibling (shared
     _crosscheck_tail / _doc_bigrams / _bigram_crosscheck_frame —
     exact strings, exact BIGINTs, NULLIF/COALESCE-guarded ppm); the
-    keep verdicts are semantic_dedup's bit-pinned pipeline, memo-
-    sharing centroid training with the round's other derived-C
-    queries (same cache_key).
+    keep verdicts are semantic_dedup's bit-pinned pipeline at the
+    same derived-C configuration as the round's other derived-C
+    queries.
 
     Scale shape: the semantic side is the derived-C cid equi-join
     (|cluster| ≈ 16 held constant, linear pair work); the bigram
@@ -682,7 +676,6 @@ def text_distinct2_semdedup_crosscheck(
         n_centroids=None,
         n_iter=2,
         target_cluster_size=16,
-        cache_key=f"{sf_dir}#derived16",
     ).select(F.col("vec_id").alias("doc_id"), "keep")
     docs = (
         load_table(spark, sf_dir, "documents")

@@ -518,7 +518,7 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a per-probe lookup table):
 
       1. coarse quantizer: first 16 vectors by id (deterministic;
-         swap kmeans_centroids_cached in at no plan change), L2
+         swap kmeans_centroids in at no plan change), L2
          assignment;
       2. residual r = v − c(v) per vector; PQ codebook = the
          residual subvectors of vecs 16..31 (4 subspaces × 16

@@ -3125,18 +3125,14 @@ def data_cartography_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the paper's headline use (planted label flips land in the
     low-confidence region)."""
     from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
-    from wilayah_aceh_etl_spark.operators.ml_train import (
-        logreg_fit_trajectory_cached,
-    )
+    from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit_trajectory
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    traj = logreg_fit_trajectory_cached(
-        emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
-    )
+    traj = logreg_fit_trajectory(emb, n_iter=3, lr=float(_TD_LR))
     v = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("x"), "y"
     )
@@ -3244,18 +3240,14 @@ def data_pruning_forgetting_events(
     per row; zero joins, zero shuffles, no global state. Probed
     non-vacuous at all three SFs (20-205 forgetting events)."""
     from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
-    from wilayah_aceh_etl_spark.operators.ml_train import (
-        logreg_fit_trajectory_cached,
-    )
+    from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit_trajectory
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    traj = logreg_fit_trajectory_cached(
-        emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
-    )
+    traj = logreg_fit_trajectory(emb, n_iter=3, lr=float(_TD_LR))
     v = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("x"), "y"
     )
@@ -4453,18 +4445,14 @@ def data_attribution_tracin_self(
     the paper's use: planted label flips land in the high-self-
     influence tail."""
     from wilayah_aceh_etl_spark.functions.vectors import as_double, dot
-    from wilayah_aceh_etl_spark.operators.ml_train import (
-        logreg_fit_trajectory_cached,
-    )
+    from wilayah_aceh_etl_spark.operators.ml_train import logreg_fit_trajectory
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
         F.when(F.col("label") < 5, 1).otherwise(0).alias("y"),
     )
-    traj = logreg_fit_trajectory_cached(
-        emb, cache_key=sf_dir, n_iter=3, lr=float(_TD_LR)
-    )
+    traj = logreg_fit_trajectory(emb, n_iter=3, lr=float(_TD_LR))
     v = emb.select(
         "vec_id", as_double(F.col("embedding")).alias("x"), "y"
     )
@@ -4654,8 +4642,8 @@ def streaming_quality_classifier_filter(
 ) -> DataFrame:
     """corpus_quality_classifier_serving through the real streaming
     path — the deployment shape of a model-based quality filter:
-    the classifier trains ONCE, batch-side (an index-build artifact,
-    like the IVF coarse quantizer), and documents arriving as four
+    the classifier trains ONCE, batch-side, before the stream
+    starts, and documents arriving as four
     mtime-ordered micro-batches are scored per trigger by the
     literal-weights expression inside foreachBatch
     (streaming/classifier_filter.py — replay-idempotent per-batch

@@ -9,6 +9,7 @@ coalesce post-shuffle partitions, and split skewed partitions.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -24,31 +25,41 @@ from pyspark.sql import SparkSession
 # count downward per query, so the static value is a ceiling, not a
 # tuning knob. Locally CPUS=32 keeps the driver's bench comparable
 # with rounds 1–11 (which ran a constant 32).
-def _env_int(value: str | None, fallback: int) -> int:
-    """Validated env-int: an empty or non-numeric value falls back
-    instead of flowing verbatim into the build-time conf and failing
-    at JVM start with an opaque error (r12 advice). Note the parity
-    battery's oracle hash checks were validated at the default
-    partition count (32) and at 7 (local[7]/CPUS=7 sweeps); other
-    values change float-sum aggregation order, which the queries'
-    deterministic-aggregation contracts are designed to tolerate,
-    but 32 stays the validated default."""
+def _env_int(name: str) -> int | None:
+    """The positive integer in env var `name`, or None when it is
+    unset. A set but malformed value (empty, non-numeric, below 1) is
+    rejected with a warning and also yields None, instead of flowing
+    verbatim into the build-time conf and failing at JVM start with an
+    opaque error (r12 advice)."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return None
     try:
-        return int(value)  # type: ignore[arg-type]
-    except (TypeError, ValueError):
-        return fallback
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value >= 1:
+        return value
+    warnings.warn(f"ignoring {name}={raw!r}: not a positive integer")
+    return None
+
+
+def _shuffle_partitions() -> int:
+    """SPARK_GRAFT_SHUFFLE_PARTITIONS, else SPARK_GRAFT_CPUS, else 32.
+    Each variable is validated on its own, so a malformed first one
+    falls back to a valid second one, and every rejected value warns.
+    Note the parity battery's oracle hash checks were validated at the
+    default partition count (32) and at 7 (local[7]/CPUS=7 sweeps);
+    other values change float-sum aggregation order, which the
+    queries' deterministic-aggregation contracts are designed to
+    tolerate, but 32 stays the validated default."""
+    shuffle = _env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    cpus = _env_int("SPARK_GRAFT_CPUS")
+    return shuffle or cpus or 32
 
 
 _BUILD_TIME_CONF = {
-    "spark.sql.shuffle.partitions": str(
-        _env_int(
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                os.environ.get("SPARK_GRAFT_CPUS"),
-            ),
-            32,
-        )
-    ),
+    "spark.sql.shuffle.partitions": str(_shuffle_partitions()),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
